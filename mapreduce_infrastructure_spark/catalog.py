@@ -11,6 +11,20 @@ Scale note: at 100 TB these reads are partitioned scans; filters/projections
 composed on the returned DataFrames push down into the parquet reader
 (Catalyst `PushedFilters`/`ReadSchema`), so loading "the whole table" here
 costs nothing until an action.
+
+Schema cache: a plain ``spark.read.parquet`` runs a Spark job to infer the
+schema from the parquet footer on every call. ``parquet_schema`` infers it
+once per process and every reader here — ``load_table`` and the streaming
+tier's file sources — passes the cached schema to ``spark.read.schema``.
+The cache key is
+
+- the absolute path of the table,
+- a fingerprint of its files: ``(mtime_ns, size)`` for a single parquet
+  file, or the sorted ``(name, size, mtime_ns)`` of every file under a
+  directory dataset, so rewriting a file or adding a part file misses,
+- the values of the schema-inference confs ``session.tune`` pins
+  (``nanosAsLong``, ``inferTimestampNTZ``), so a session that reads
+  timestamps differently never gets another session's schema.
 """
 
 from __future__ import annotations
@@ -18,7 +32,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType, TimestampType
 
 from .session import tune
 
@@ -88,6 +102,49 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+# The confs that change what parquet schema inference returns.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+
+def table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
+
+
+def fingerprint(path: str) -> tuple:
+    """``(mtime_ns, size)`` of a file, or the sorted ``(relative name, size,
+    mtime_ns)`` of every file under a directory (symlinks followed)."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (st.st_mtime_ns, st.st_size)
+    parts = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            parts.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(parts))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, cached per process
+    under the key described in the module docstring."""
+    path = os.path.abspath(path)
+    key = (
+        path,
+        fingerprint(path),
+        tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS),
+    )
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        _SCHEMA_CACHE[key] = schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table, normalizing types to engine conventions.
 
@@ -97,7 +154,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     flip between rounds 2 and 3 cost two rounds precisely because nothing
     asserted the post-normalization type."""
     tune(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_ts(df)
         dt = df.schema["ts"].dataType
@@ -116,6 +174,6 @@ def register_views(
     """Register fixture tables as temp views for spark.sql queries.
 
     Pass the tables the query actually reads — registering all 10 costs 10
-    parquet footer reads per call for queries that need 1-2."""
+    parquet footer reads on the first call for queries that need 1-2."""
     for name in tables if tables is not None else TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)

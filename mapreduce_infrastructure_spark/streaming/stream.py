@@ -20,6 +20,15 @@ Pieces:
 - watermark/late-data semantics exercised in tests/test_streaming.py
   (append mode only emits watermark-finalized windows).
 
+End of input: after the last data batch, a query with a watermark runs one
+more micro-batch with no input, in which the advanced watermark evicts
+state. ``run_to_table`` keeps that batch by default, because outer joins
+emit their NULL-padded rows and append-mode windows their finalized rows
+there. The inner stream-stream join, ``stream_dedup_events`` and
+``stream_hourly_active_users`` pass ``evict_batch=False``: their stateful
+operators cannot emit on a watermark move, so the batch would only evict
+and commit state, and they finish in one micro-batch.
+
 Scale notes (100 TB/day event firehose):
 - State lives in the state store keyed by (window, key) / user — bounded by
   watermark eviction, partitioned by the shuffle, never on the driver.
@@ -37,7 +46,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..catalog import scratch_dir
+from ..catalog import (
+    fingerprint,
+    normalize_ts,
+    parquet_schema,
+    scratch_dir,
+    table_path,
+)
 from ..functions.exact import davg, dec, disc_rev, dsum, lcount, rnd
 from ..llm.dedup import _INCR_OLD_MAX, INCR_DEDUP_ORACLE, content_fp
 from ..operators.relational import MERGE_ORACLE as _MERGE_ORACLE
@@ -50,7 +65,7 @@ from .batch_windows import SESSION_ORACLE, SLIDING_ORACLE, TUMBLING_ORACLE
 # epoch-nanos BIGINT). File-source readers must NOT assume a ts storage
 # type — the fixture has changed between TIMESTAMP(NANOS) and naive
 # TIMESTAMP(µs) across driver rounds — so they take the schema from the
-# parquet footer via a one-off batch read and normalize with
+# parquet footer (catalog.parquet_schema) and normalize with
 # catalog.normalize_ts.
 _RAW_EVENTS = (
     "event_id bigint, ts long, user_id bigint, event_type string,"
@@ -68,7 +83,7 @@ def _staged_table_dir(sf_dir: str, table: str) -> str:
     tools/scale_check.py replicas), tail it directly — staging a symlinked
     SUBdirectory would hide the files from the source's non-recursive
     listing."""
-    target_ds = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
+    target_ds = table_path(sf_dir, table)
     if os.path.isdir(target_ds):
         return target_ds
     d = os.path.join(
@@ -89,39 +104,15 @@ def _staged_table_dir(sf_dir: str, table: str) -> str:
     return d
 
 
-# Footer-schema cache for the staged event-log dir: one batch footer read
-# per (staged dir, fixture fingerprint) per process instead of one per
-# query call — at 100 TB the schema read is cheap but it is a full driver
-# job, and the bench runs 7 stream_* queries back to back. Keyed on the
-# fixture file's (mtime_ns, size) so a regenerated fixture invalidates.
-_FOOTER_SCHEMA_CACHE: dict = {}
-
-
-def _table_fingerprint(sf_dir: str, table: str) -> tuple:
-    st = os.stat(os.path.join(os.path.abspath(sf_dir), f"{table}.parquet"))
-    return (st.st_mtime_ns, st.st_size)
-
-
-def _events_fingerprint(sf_dir: str) -> tuple:
-    return _table_fingerprint(sf_dir, "events")
-
-
-def _staged_events_dir(sf_dir: str) -> str:
-    return _staged_table_dir(sf_dir, "events")
-
-
 def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """File-source readStream over any fixture table, schema from the
-    parquet footer (cached) — the generic form behind `stream_events`;
+    parquet footer (catalog.parquet_schema, cached per process and shared
+    with catalog.load_table) — the generic form behind `stream_events`;
     no timestamp normalization (callers that need event time go through
     `stream_events`)."""
     tune(spark)
     d = _staged_table_dir(sf_dir, table)
-    key = (d, _table_fingerprint(sf_dir, table))
-    file_schema = _FOOTER_SCHEMA_CACHE.get(key)
-    if file_schema is None:
-        file_schema = spark.read.parquet(d).schema
-        _FOOTER_SCHEMA_CACHE[key] = file_schema
+    file_schema = parquet_schema(spark, table_path(sf_dir, table))
     return spark.readStream.schema(file_schema).parquet(d)
 
 
@@ -134,47 +125,74 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIMESTAMP(µs) files hands back the raw stored int64 in whatever unit
     the file used, so downstream math assuming epoch-nanos divided µs by
     1000 and silently landed every event in 1970 — windowed streams emitted
-    near-empty results with no error. A batch footer read (cached per
-    staged dir + fixture fingerprint) keeps the stream schema in lockstep
-    with the files."""
-    from ..catalog import normalize_ts
-
-    tune(spark)
-    d = _staged_events_dir(sf_dir)
-    key = (d, _events_fingerprint(sf_dir))
-    file_schema = _FOOTER_SCHEMA_CACHE.get(key)
-    if file_schema is None:
-        file_schema = spark.read.parquet(d).schema
-        _FOOTER_SCHEMA_CACHE[key] = file_schema
-    src = spark.readStream.schema(file_schema).parquet(d)
-    return normalize_ts(src)
+    near-empty results with no error. The footer schema (cached by
+    catalog.parquet_schema per fixture fingerprint) keeps the stream schema
+    in lockstep with the files."""
+    return normalize_ts(stream_table(spark, sf_dir, "events"))
 
 
-def run_to_table(stream_df: DataFrame, name: str, mode: str = "complete") -> DataFrame:
-    """Run a streaming frame to completion (AvailableNow) into an in-memory
-    sink and return the materialized result as a batch DataFrame.
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
-    This is the bridge that lets the driver's batch oracle check streaming
-    plans: same input, same answer, incremental execution."""
-    spark = stream_df.sparkSession
-    ckpt = os.path.join(_CHECKPOINTS, name)
+
+def _start(stream_df: DataFrame, name: str, mode: str, evict_batch: bool):
+    """Start one bridge query: fresh checkpoint, memory sink ``name``,
+    availableNow to end of input. With ``evict_batch=False`` the no-data
+    micro-batch is disabled for this query only: Spark copies the session
+    conf into the query's own session at ``start()``, so the old value is
+    restored right after."""
     import shutil
 
+    ckpt = os.path.join(_CHECKPOINTS, name)
     shutil.rmtree(ckpt, ignore_errors=True)
-    q = (
+    writer = (
         stream_df.writeStream.format("memory")
         .queryName(name)
         .outputMode(mode)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return spark.table(name)
+    if evict_batch:
+        return writer.start()
+    conf = stream_df.sparkSession.conf
+    prev = conf.get(_NO_DATA_BATCHES, None)
+    conf.set(_NO_DATA_BATCHES, "false")
+    try:
+        return writer.start()
+    finally:
+        if prev is None:
+            conf.unset(_NO_DATA_BATCHES)
+        else:
+            conf.set(_NO_DATA_BATCHES, prev)
+
+
+def run_to_table(
+    stream_df: DataFrame,
+    name: str,
+    mode: str = "complete",
+    evict_batch: bool = True,
+) -> DataFrame:
+    """Run a streaming frame to completion (AvailableNow) into an in-memory
+    sink and return the materialized result as a batch DataFrame.
+
+    This is the bridge that lets the driver's batch oracle check streaming
+    plans: same input, same answer, incremental execution.
+
+    ``evict_batch``: once the input is consumed, a query with a watermark
+    runs one more micro-batch with no input, in which the advanced
+    watermark evicts state. Keep it (the default) whenever that batch can
+    emit rows: outer joins emit their NULL-padded rows there, and append-
+    mode windows and watermark-gated operators emit their finalized
+    results there. Pass ``False`` only when the stateful operators cannot
+    emit on a watermark move — an inner stream-stream join, or
+    ``dropDuplicatesWithinWatermark`` feeding a complete-mode aggregate —
+    so the batch would only evict state and commit it."""
+    return run_to_tables([(stream_df, name)], mode, evict_batch)[0]
 
 
 def run_to_tables(
-    named_streams: "list[tuple[DataFrame, str]]", mode: str = "complete"
+    named_streams: "list[tuple[DataFrame, str]]",
+    mode: str = "complete",
+    evict_batch: bool = True,
 ) -> "list[DataFrame]":
     """Run several INDEPENDENT streaming frames to completion CONCURRENTLY
     (start all, then await all) and return their materialized tables in
@@ -188,24 +206,23 @@ def run_to_tables(
     by the first's tail (guide §2.6, overlap independent jobs) instead of
     paying two full start→commit→teardown latencies end to end. Callers
     must pass queries with DISJOINT sink names and no data dependency on
-    each other's sink (the two call sites aggregate different inputs)."""
-    import shutil
+    each other's sink (the two call sites aggregate different inputs).
 
+    If a ``start()`` or ``awaitTermination()`` raises, every query this
+    call started that is still active is stopped before the error
+    propagates, so a failure leaks no running query."""
     spark = named_streams[0][0].sparkSession
     queries = []
-    for stream_df, name in named_streams:
-        ckpt = os.path.join(_CHECKPOINTS, name)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        queries.append(
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    for q in queries:
-        q.awaitTermination()
+    try:
+        for stream_df, name in named_streams:
+            queries.append(_start(stream_df, name, mode, evict_batch))
+        for q in queries:
+            q.awaitTermination()
+    except BaseException:
+        for q in queries:
+            if q.isActive:
+                q.stop()
+        raise
     return [spark.table(name) for _, name in named_streams]
 
 
@@ -295,6 +312,46 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _click_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Clicks joined to purchases by the same user within the following 30
+    minutes, both sides watermarked 1 hour — the one body behind the inner,
+    left and full outer stream-stream join queries. ``user_id`` coalesces
+    the two sides, which only matters for full-outer purchase-only rows:
+    every other row carries the click's user."""
+    ev = stream_events(spark, sf_dir)
+    clicks = (
+        ev.filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("c_ts"),
+        )
+        .withWatermark("c_ts", "1 hour")
+    )
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("p_ts"),
+        )
+        .withWatermark("p_ts", "1 hour")
+    )
+    return clicks.join(
+        purchases,
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("c_ts"))
+        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
+        how,
+    ).select(
+        "click_id",
+        "purchase_id",
+        F.coalesce("c_user", "p_user").alias("user_id"),
+        F.unix_micros("c_ts").alias("click_us"),
+        F.unix_micros("p_ts").alias("purchase_us"),
+    )
+
+
 @query(
     "stream_join_click_purchase",
     oracle="""
@@ -318,39 +375,16 @@ def stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffered state as the watermark advances — the only formulation whose
     state stays bounded on an infinite stream. Run to end-of-input, the
     result equals the equivalent batch interval join, which the oracle
-    states directly."""
-    ev = stream_events(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
+    states directly. An inner join emits a row only when both sides have
+    arrived, never on a watermark move, so the end-of-input watermark batch
+    is skipped (``evict_batch=False``): it would only evict and commit
+    state."""
+    return run_to_table(
+        _click_purchase_join(spark, sf_dir, "inner"),
+        "stream_join_click_purchase",
+        mode="append",
+        evict_batch=False,
     )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.col("c_user").alias("user_id"),
-        F.unix_micros("c_ts").alias("click_us"),
-        F.unix_micros("p_ts").alias("purchase_us"),
-    )
-    return run_to_table(joined, "stream_join_click_purchase", mode="append")
 
 
 @query(
@@ -401,39 +435,11 @@ def stream_left_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFra
 
     State/scale: identical eviction bound to the inner join — both
     sides buffered only inside the watermark horizon."""
-    ev = stream_events(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
+    return run_to_table(
+        _click_purchase_join(spark, sf_dir, "left_outer"),
+        "stream_left_join_click_purchase",
+        mode="append",
     )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.col("c_user").alias("user_id"),
-        F.unix_micros("c_ts").alias("click_us"),
-        F.unix_micros("p_ts").alias("purchase_us"),
-    )
-    return run_to_table(joined, "stream_left_join_click_purchase", mode="append")
 
 
 @query(
@@ -489,39 +495,11 @@ def stream_full_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFra
 
     State/scale: identical per-side eviction bounds to the inner/left
     joins — nothing is buffered beyond the watermark horizon."""
-    ev = stream_events(spark, sf_dir)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
+    return run_to_table(
+        _click_purchase_join(spark, sf_dir, "full_outer"),
+        "stream_full_join_click_purchase",
+        mode="append",
     )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "full_outer",
-    ).select(
-        "click_id",
-        "purchase_id",
-        F.coalesce("c_user", "p_user").alias("user_id"),
-        F.unix_micros("c_ts").alias("click_us"),
-        F.unix_micros("p_ts").alias("purchase_us"),
-    )
-    return run_to_table(joined, "stream_full_join_click_purchase", mode="append")
 
 
 @query(
@@ -549,7 +527,9 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup state (one entry per event forever on an unbounded stream).
     deduped = doubled.dropDuplicatesWithinWatermark(["event_id"])
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_unique"))
-    return run_to_table(agg, "stream_dedup_events", mode="complete")
+    # Dedup eviction emits no rows into a complete-mode count, so the
+    # end-of-input watermark batch would only evict and commit state.
+    return run_to_table(agg, "stream_dedup_events", mode="complete", evict_batch=False)
 
 
 @query(
@@ -601,6 +581,8 @@ def stream_hourly_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             (totals, "stream_hourly_active_users_tot"),
         ],
         mode="complete",
+        # As in stream_dedup_events: the watermark batch only evicts.
+        evict_batch=False,
     )
     return (
         left.join(right, "h")
@@ -1094,8 +1076,6 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     tune(spark)
-    from ..catalog import normalize_ts
-
     scratch = os.path.join(os.path.dirname(_CHECKPOINTS), "cdc")
     sfb = os.path.basename(sf_dir.rstrip("/"))
     src = os.path.join(scratch, sfb, "src")
@@ -1109,7 +1089,7 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixture fingerprint marker so a regenerated fixture rebuilds the
     # staging instead of silently serving stale/unit-mismatched data.
     marker = os.path.join(scratch, sfb, "src.fingerprint")
-    fp = repr(_events_fingerprint(sf_dir))
+    fp = repr(fingerprint(table_path(sf_dir, "events")))
     stale = True
     if os.path.isdir(src) and os.path.isfile(marker):
         with open(marker) as fh:
@@ -1191,7 +1171,7 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(old, ignore_errors=True)
 
     stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
+        spark.readStream.schema(parquet_schema(spark, src))
         .option("maxFilesPerTrigger", 2)
         .parquet(src)
     )

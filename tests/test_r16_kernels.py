@@ -555,3 +555,20 @@ def test_shared_value_computes_once_per_slot_and_app(spark):
     finally:
         C._VALUES.pop(key, None)
         C._VALUES.pop(f"{slot}2@{spark.sparkContext.applicationId}", None)
+
+
+def test_shared_value_builds_none_once(spark):
+    """A build() that returns None is cached like any other value, not
+    mistaken for a miss and re-run on every call."""
+    from mapreduce_infrastructure_spark.llm import cache as C
+
+    calls = []
+    slot = "test_shared_value_none_slot"
+    key = f"{slot}@{spark.sparkContext.applicationId}"
+    C._VALUES.pop(key, None)
+    try:
+        assert C.shared_value(spark, lambda: calls.append(1), slot) is None
+        assert C.shared_value(spark, lambda: calls.append(1), slot) is None
+        assert len(calls) == 1
+    finally:
+        C._VALUES.pop(key, None)

@@ -9,9 +9,15 @@ append mode emitting only watermark-finalized windows.
 
 from __future__ import annotations
 
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
+from mapreduce_infrastructure_spark.registry import all_queries
 from mapreduce_infrastructure_spark.streaming import batch_windows, stream
+
+from .helpers import check_query
 
 
 def _rows(df, cols):
@@ -113,7 +119,88 @@ def test_stream_stream_left_outer_semantics(spark, sf_dir):
     # Every null-extended click must genuinely have no purchase within its
     # 30-minute window (cross-check against the batch inner join).
     inner_clicks = {c for c, _ in inner}
+    # The NULL-padded rows are emitted by the end-of-input watermark batch;
+    # a bridge that skipped it for outer joins would return none.
+    assert unmatched, "left outer join emitted no unmatched click"
     assert all(r.click_id not in inner_clicks for r in unmatched)
+
+
+def _record_started(monkeypatch):
+    """Capture every StreamingQuery the bridge starts, for recentProgress."""
+    started = []
+    orig = stream._start
+
+    def rec(*a, **k):
+        q = orig(*a, **k)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(stream, "_start", rec)
+    return started
+
+
+def _batches(q):
+    return [(p["batchId"], p["numInputRows"]) for p in q.recentProgress]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "stream_join_click_purchase",
+        "stream_dedup_events",
+        "stream_hourly_active_users",
+    ],
+)
+def test_evict_only_batch_skipped(spark, sf_dir, monkeypatch, name):
+    """Streams whose stateful operators cannot emit on a watermark move run
+    to end of input in exactly one micro-batch, and still match their
+    oracle."""
+    q = all_queries()[name]
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(key, None)
+    started = _record_started(monkeypatch)
+    check_query(spark, sf_dir, name, q.fn, q.oracle)
+    assert started
+    for sq in started:
+        assert len(_batches(sq)) == 1, (sq.name, _batches(sq))
+    # The conf is switched off for the bridge's own query only.
+    assert spark.conf.get(key, None) == before
+
+
+@pytest.mark.parametrize(
+    "name", ["stream_left_join_click_purchase", "stream_full_join_click_purchase"]
+)
+def test_outer_joins_keep_watermark_batch(spark, sf_dir, monkeypatch, name):
+    """Outer joins emit their NULL-padded rows in the no-data batch after
+    the last input, so they must keep it."""
+    started = _record_started(monkeypatch)
+    all_queries()[name].fn(spark, sf_dir).collect()
+    [sq] = started
+    batches = _batches(sq)
+    assert len(batches) >= 2 and batches[-1][1] == 0, batches
+
+
+def test_run_to_tables_failed_start_leaks_no_query(spark, sf_dir):
+    """If a later stream's start() raises, the queries the call already
+    started are stopped before the error propagates."""
+    def slow(batches):
+        for pdf in batches:
+            time.sleep(5)
+            yield pdf
+
+    ev = stream.stream_events(spark, sf_dir).select("event_id", "event_type")
+    running = ev.mapInPandas(slow, ev.schema).groupBy("event_type").count()
+    # complete mode without an aggregation is rejected at start().
+    bad = ev.select("event_id")
+    names = ["leak_probe_running", "leak_probe_bad"]
+    try:
+        with pytest.raises(Exception, match="(?i)complete"):
+            stream.run_to_tables([(running, names[0]), (bad, names[1])])
+        assert not [q.name for q in spark.streams.active if q.name in names]
+    finally:
+        for q in spark.streams.active:
+            if q.name in names:
+                q.stop()
 
 
 def test_kafka_guard_clean_error(spark):
